@@ -13,7 +13,8 @@ Cross-engine hash-parity rules used throughout the corpus:
   and are cast back to double once — bit-identical in both engines.
 * Averages are written ``CAST(sum AS DOUBLE) / count`` so both engines do
   one IEEE double division.
-* ``events.ts`` is truncated to microseconds on both sides (nanos parquet).
+* ``events.ts`` is microseconds on both sides (the shipped files store
+  TIMESTAMP(MICROS); a NANOS file is truncated to µs in both engines).
 * LIMIT queries carry a total ORDER BY (unique tiebreaker column) so the
   kept rows are deterministic.
 """

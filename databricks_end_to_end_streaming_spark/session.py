@@ -11,9 +11,11 @@ cluster:
   the reference's unbounded `dropDuplicates` state would OOM the default
   HDFS-backed in-memory store).
 * UTC session timezone so TIMESTAMP semantics match the DuckDB oracle.
-* `nanosAsLong` because the driver's `events.parquet` carries
-  TIMESTAMP(NANOS), which Spark has no native type for; `tables.py`
-  re-types the column to TIMESTAMP_NTZ at microsecond precision.
+* `nanosAsLong` so an `events.parquet` that carries TIMESTAMP(NANOS),
+  which Spark has no native type for, stays readable; `tables.py`
+  re-types that column to TIMESTAMP_NTZ at microsecond precision. The
+  sf0.001/0.01/0.1 files store TIMESTAMP(MICROS) and read as
+  TIMESTAMP_NTZ without it.
 """
 
 from __future__ import annotations
@@ -91,7 +93,8 @@ def get_spark(
         ),
         # Arrow for pandas-UDF boundaries (the only place rows leave the JVM).
         "spark.sql.execution.arrow.pyspark.enabled": "true",
-        # Driver testdata ships TIMESTAMP(NANOS) parquet (events.ts).
+        # Keeps TIMESTAMP(NANOS) parquet readable (as epoch-nanos longs);
+        # the shipped events.ts files are TIMESTAMP(MICROS).
         "spark.sql.legacy.parquet.nanosAsLong": "true",
         # Local runs: don't spin up the UI.
         "spark.ui.enabled": os.environ.get("SPARK_GRAFT_UI", "false"),

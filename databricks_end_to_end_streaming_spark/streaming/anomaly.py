@@ -58,9 +58,7 @@ def summed_scalar_moments(
     """Merge the partial log to one (n, sx, sxx) per key; with
     ``up_to_batch``, only batches <= that id contribute (the replay-
     deterministic prequential view)."""
-    log = table.read(spark)
-    if up_to_batch is not None:
-        log = log.where(F.col("_batch_id") <= up_to_batch)
+    log = table.read_log(spark, up_to_batch)
     return log.groupBy("key").agg(
         *[F.sum(c).alias(c) for c in SCALAR_MOMENT_COLS]
     )
@@ -102,26 +100,18 @@ def anomaly_stage(
 ):
     """foreachBatch body factory: accumulate this batch's scalar moments
     and append its prequentially-flagged rows. Wire as
-    ``stream.writeStream.foreachBatch(anomaly_stage(...))``."""
+    ``drain_foreach(stream, anomaly_stage(...), ...)``."""
 
     def stage(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.persist()
         try:
-            partials = partial_scalar_moments(batch_df, key, x).withColumn(
-                "_batch_id", F.lit(batch_id)
-            )
-            moment_table.idempotent_append(
-                partials, f"batchid={batch_id}/role=moments"
-            )
+            partials = partial_scalar_moments(batch_df, key, x)
+            moment_table.append_log(partials, batch_id, "moments")
             moments = summed_scalar_moments(
                 batch_df.sparkSession, moment_table, up_to_batch=batch_id
             )
-            flagged = score_zscore(
-                batch_df, moments, key, x, threshold
-            ).withColumn("_batch_id", F.lit(batch_id))
-            flagged_table.idempotent_append(
-                flagged, f"batchid={batch_id}/role=flagged"
-            )
+            flagged = score_zscore(batch_df, moments, key, x, threshold)
+            flagged_table.append_log(flagged, batch_id, "flagged")
         finally:
             batch_df.unpersist()
 

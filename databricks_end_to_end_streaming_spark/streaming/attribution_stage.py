@@ -39,6 +39,7 @@ from ..queries.analytics import (
     attributed_purchases,
     attribution_rollup,
 )
+from .medallion import drain_foreach
 from .sinks import ParquetTable
 
 
@@ -62,9 +63,9 @@ def latest_touch_state(
     """(user_id, touch_type, touch_us, touch_event_id): fold the touch
     log to each user's latest touch (argmax by (us, event_id) — the
     window order's tiebreak)."""
-    log = touch_table.read(spark)
-    if before_batch is not None:
-        log = log.where(F.col("_batch_id") < before_batch)
+    log = touch_table.read_log(
+        spark, None if before_batch is None else before_batch - 1
+    )
     best = F.max(
         F.struct(
             F.col("touch_us"), F.col("touch_event_id"), F.col("touch_type")
@@ -107,10 +108,7 @@ def attribution_batch(
         spliced = e
 
     attributed = attributed_purchases(spliced).where(F.col("event_id") >= 0)
-    out_table.idempotent_append(
-        attributed.withColumn("_batch_id", F.lit(batch_id)),
-        f"batchid={batch_id}/role=attributed",
-    )
+    out_table.append_log(attributed, batch_id, "attributed")
 
     is_touch = F.col("event_type").isin(*TOUCH_TYPES)
     batch_latest = (
@@ -133,10 +131,7 @@ def attribution_batch(
         )
     )
     try:
-        touch_table.idempotent_append(
-            batch_latest.withColumn("_batch_id", F.lit(batch_id)),
-            f"batchid={batch_id}/role=touch",
-        )
+        touch_table.append_log(batch_latest, batch_id, "touch")
     finally:
         e.unpersist()
 
@@ -158,9 +153,7 @@ def attribution_from_log(
     """Channel rollup over the accumulated attributed-purchase log —
     the batch query's exact aggregation (shared ``attribution_rollup``),
     prequential with ``up_to_batch``."""
-    df = out_table.read(spark)
-    if up_to_batch is not None:
-        df = df.where(F.col("_batch_id") <= up_to_batch)
+    df = out_table.read_log(spark, up_to_batch)
     return attribution_rollup(df.drop("_batch_id"))
 
 
@@ -173,14 +166,9 @@ def attribution_index_stage(
 ) -> None:
     """Streaming wrapper: drain available batches (Trigger-Once, SURVEY
     T1) through the incremental attribution."""
-    (
-        source.writeStream.foreachBatch(
-            attribution_stage(out_table, touch_table)
-        )
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain_foreach(
+        source,
+        attribution_stage(out_table, touch_table),
+        checkpoint,
+        query_name,
     )

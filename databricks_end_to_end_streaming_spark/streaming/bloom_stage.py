@@ -42,6 +42,7 @@ from ..operators.bloom import (
     bloom_probe_flag,
 )
 from ..pin import pin
+from .medallion import drain_foreach
 from .sinks import ParquetTable, batch_id_col, exclude_batch
 
 BLOOM_M_BITS = 1 << 20
@@ -173,13 +174,8 @@ def bloom_dedup_batch(
         new_docs = new_docs.transform(
             lambda d: pin(d, require_frozen=True, site="bloom.new_docs")
         )
-        out_table.idempotent_append(
-            new_docs.drop("fp"), f"batchid={batch_id}/role=docs"
-        )
-        fp_table.idempotent_append(
-            new_docs.select("fp").withColumn("_batch_id", F.lit(batch_id)),
-            f"batchid={batch_id}/role=fp",
-        )
+        out_table.idempotent_append(new_docs.drop("fp"), batch_id, "role=docs")
+        fp_table.append_log(new_docs.select("fp"), batch_id, "fp")
         batch_words = bloom_build(batch, "fp", m_bits)
         merged = (
             bloom_merge(bitmap, batch_words) if bitmap is not None else batch_words
@@ -227,15 +223,7 @@ def bloom_dedup_stage(
             fingerprint=fingerprint,
         )
 
-    (
-        source.writeStream.foreachBatch(process)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_foreach(source, process, checkpoint, query_name)
 
 
 def url_fingerprint(url_col: str = "url") -> F.Column:

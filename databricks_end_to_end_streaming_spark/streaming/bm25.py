@@ -32,6 +32,7 @@ from ..queries.text import (
     bm25_doc_features,
     bm25_score_from,
 )
+from .medallion import drain_foreach
 from .sinks import ParquetTable
 
 
@@ -43,14 +44,8 @@ def bm25_stage(features_table: ParquetTable, stats_table: ParquetTable):
 
     def stage(batch_df: DataFrame, batch_id: int) -> None:
         base = bm25_doc_features(batch_df)
-        features_table.idempotent_append(
-            base.withColumn("_batch_id", F.lit(batch_id)),
-            f"batchid={batch_id}/role=features",
-        )
-        stats_table.idempotent_append(
-            bm25_corpus_stats(base).withColumn("_batch_id", F.lit(batch_id)),
-            f"batchid={batch_id}/role=stats",
-        )
+        features_table.append_log(base, batch_id, "features")
+        stats_table.append_log(bm25_corpus_stats(base), batch_id, "stats")
 
     return stage
 
@@ -67,11 +62,8 @@ def bm25_topk_from_log(
     batches <= that id contribute (prequential view); ``top_k`` widens
     the cut for downstream consumers (the hybrid-RRF lexical leg served
     from this log)."""
-    feats = features_table.read(spark)
-    stats_log = stats_table.read(spark)
-    if up_to_batch is not None:
-        feats = feats.where(F.col("_batch_id") <= up_to_batch)
-        stats_log = stats_log.where(F.col("_batch_id") <= up_to_batch)
+    feats = features_table.read_log(spark, up_to_batch)
+    stats_log = stats_table.read_log(spark, up_to_batch)
     # fold only the monoid columns: _-prefixed bookkeeping and the
     # token-dir partition columns (batchid/role, parquet mode only) are
     # not statistics
@@ -98,14 +90,9 @@ def bm25_index_stage(
 ) -> None:
     """Streaming wrapper: drain available document batches into the
     incremental BM25 index (Trigger-Once semantics, SURVEY T1)."""
-    (
-        source.writeStream.foreachBatch(
-            bm25_stage(features_table, stats_table)
-        )
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain_foreach(
+        source,
+        bm25_stage(features_table, stats_table),
+        checkpoint,
+        query_name,
     )

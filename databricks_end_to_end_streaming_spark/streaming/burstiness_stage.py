@@ -41,7 +41,8 @@ def burstiness_stage(table: ParquetTable):
             partials.withColumn("_batch_id", F.lit(batch_id)).withColumn(
                 "_n_docs", F.lit(None).cast("long")
             ),
-            f"batchid={batch_id}/role=moments",
+            batch_id,
+            "role=moments",
         )
         n = batch_df.agg(F.count("*").alias("_n_docs")).select(
             F.lit(None).cast("string").alias("w"),
@@ -51,7 +52,7 @@ def burstiness_stage(table: ParquetTable):
             F.lit(batch_id).alias("_batch_id"),
             "_n_docs",
         )
-        table.idempotent_append(n, f"batchid={batch_id}/role=ndocs")
+        table.idempotent_append(n, batch_id, "role=ndocs")
 
     return stage
 
@@ -63,9 +64,7 @@ def burstiness_from_log(
 ) -> DataFrame:
     """Batch-identical top-k burstiness over the folded moment log
     (prequential with ``up_to_batch``)."""
-    log = table.read(spark)
-    if up_to_batch is not None:
-        log = log.where(F.col("_batch_id") <= up_to_batch)
+    log = table.read_log(spark, up_to_batch)
     mom = (
         log.where(F.col("w").isNotNull())
         .groupBy("w")

@@ -44,9 +44,8 @@ def cdc_stage(table: ParquetTable):
                 F.max("chunk_len").alias("len"),
                 F.count("*").alias("occ"),
             )
-            .withColumn("_batch_id", F.lit(batch_id))
         )
-        table.idempotent_append(partial, f"batchid={batch_id}/role=cdc")
+        table.append_log(partial, batch_id, "cdc")
 
     return stage
 
@@ -58,9 +57,7 @@ def cdc_report_from_log(
 ) -> DataFrame:
     """(occurrences, n_distinct_chunks, distinct_bytes, total_bytes) —
     the batch query's exact histogram, folded from the partial log."""
-    log = table.read(spark)
-    if up_to_batch is not None:
-        log = log.where(F.col("_batch_id") <= up_to_batch)
+    log = table.read_log(spark, up_to_batch)
     folded = log.groupBy("fp").agg(
         F.max("len").alias("len"), F.sum("occ").alias("occ")
     )

@@ -64,10 +64,7 @@ def classifier_stage(stats_table: ParquetTable):
     partials (<= dim + 1 rows)."""
 
     def stage(batch_df: DataFrame, batch_id: int) -> None:
-        stats_table.idempotent_append(
-            _batch_partial(batch_df).withColumn("_batch_id", F.lit(batch_id)),
-            f"batchid={batch_id}/role=clsstats",
-        )
+        stats_table.append_log(_batch_partial(batch_df), batch_id, "clsstats")
 
     return stage
 
@@ -81,9 +78,7 @@ def classifier_weights_from_log(
     relation (bucket, s0, s1, w) — bit-for-bit the batch query's output
     on the same data. ``up_to_batch`` gives the prequential as-of
     view."""
-    log = stats_table.read(spark)
-    if up_to_batch is not None:
-        log = log.where(F.col("_batch_id") <= up_to_batch)
+    log = stats_table.read_log(spark, up_to_batch)
     folded = log.groupBy("bucket").agg(
         F.sum("s0").cast("long").alias("s0"),
         F.sum("s1").cast("long").alias("s1"),

@@ -26,7 +26,6 @@ the benchmark re-ranking amortizes over more new documents.
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..queries.dedup import decontam_accounting
@@ -38,12 +37,7 @@ def decontam_stage(acc_table: ParquetTable, bench: DataFrame):
     standing benchmark and append the per-doc accounting."""
 
     def stage(batch_df: DataFrame, batch_id: int) -> None:
-        acc_table.idempotent_append(
-            decontam_accounting(batch_df, bench).withColumn(
-                "_batch_id", F.lit(batch_id)
-            ),
-            f"batchid={batch_id}/role=decontam",
-        )
+        acc_table.append_log(decontam_accounting(batch_df, bench), batch_id, "decontam")
 
     return stage
 

@@ -44,7 +44,7 @@ def dsir_stage(tf_table: ParquetTable, bucket_table: ParquetTable, target: Colum
             .agg(F.count("*").alias("tf"))
             .transform(pin)
         )
-        doc_tf = tf3.drop("is_target").withColumn("_batch_id", F.lit(batch_id))
+        doc_tf = tf3.drop("is_target")
         buckets = (
             tf3.groupBy("b")
             .agg(
@@ -53,12 +53,9 @@ def dsir_stage(tf_table: ParquetTable, bucket_table: ParquetTable, target: Colum
                     F.when(F.col("is_target"), F.col("tf")).otherwise(F.lit(0))
                 ).alias("cnt_t"),
             )
-            .withColumn("_batch_id", F.lit(batch_id))
         )
-        tf_table.idempotent_append(doc_tf, f"batchid={batch_id}/role=doctf")
-        bucket_table.idempotent_append(
-            buckets, f"batchid={batch_id}/role=buckets"
-        )
+        tf_table.append_log(doc_tf, batch_id, "doctf")
+        bucket_table.append_log(buckets, batch_id, "buckets")
 
     return stage
 
@@ -72,11 +69,8 @@ def dsir_scores_from_log(
     """(doc_id, dsir_score) from the accumulated partial logs — shared
     scoring core, so drained == batch bit-for-bit. With ``up_to_batch``
     only batches <= that id contribute (prequential trajectory)."""
-    tf_log = tf_table.read(spark)
-    bucket_log = bucket_table.read(spark)
-    if up_to_batch is not None:
-        tf_log = tf_log.where(F.col("_batch_id") <= up_to_batch)
-        bucket_log = bucket_log.where(F.col("_batch_id") <= up_to_batch)
+    tf_log = tf_table.read_log(spark, up_to_batch)
+    bucket_log = bucket_table.read_log(spark, up_to_batch)
     doc_tf = tf_log.groupBy("doc_id", "b").agg(F.sum("tf").alias("tf"))
     buckets = bucket_log.groupBy("b").agg(
         F.sum("cnt_r").alias("cnt_r"), F.sum("cnt_t").alias("cnt_t")

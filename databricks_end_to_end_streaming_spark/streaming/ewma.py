@@ -46,9 +46,9 @@ def current_ewma(
     """Latest (key, ewma, n_events) per key; with ``before_batch``,
     latest STRICTLY BEFORE that batch id (the replay-safe prior-state
     view batch N folds from)."""
-    log = state_table.read(spark)
-    if before_batch is not None:
-        log = log.where(F.col("_batch_id") < before_batch)
+    log = state_table.read_log(
+        spark, None if before_batch is None else before_batch - 1
+    )
     w = Window.partitionBy("key").orderBy(F.desc("_batch_id"))
     return (
         log.withColumn("_rn", F.row_number().over(w))
@@ -66,7 +66,7 @@ def ewma_stage(
 ):
     """foreachBatch body factory: continue each key's EWMA fold across
     micro-batches. Wire as
-    ``stream.writeStream.foreachBatch(ewma_stage(...))``.
+    ``drain_foreach(stream, ewma_stage(...), ...)``.
 
     ``order`` must form a TOTAL order per key within a batch (add a
     unique tiebreaker — e.g. ``("ts", "event_id")``, the batch query's
@@ -116,8 +116,7 @@ def ewma_stage(
             (F.coalesce(F.col("_prior_n"), F.lit(0)) + F.col("_batch_n")).alias(
                 "n_events"
             ),
-            F.lit(batch_id).alias("_batch_id"),
         )
-        state_table.idempotent_append(out, f"batchid={batch_id}/role=ewma")
+        state_table.append_log(out, batch_id, "ewma")
 
     return stage

@@ -71,6 +71,7 @@ from ..operators.suffix import (
     window_expr,
 )
 from ..pin import pin
+from .medallion import drain_foreach
 from .sinks import ParquetTable, exclude_batch
 
 DEFAULT_MIN_LEN = 8
@@ -156,26 +157,19 @@ def exact_substr_batch(
                 "left_anti",
             )
 
-        cuts_table.idempotent_append(
+        cuts_table.append_log(
             # min_len rides on every cut row so the FOLD is
             # self-describing: cleaned_from_log derives span_end from
             # the logged width instead of trusting a second call site
             # to repeat the stage's configuration
-            covered.withColumn("min_len", F.lit(min_len)).withColumn(
-                "_batch_id", F.lit(batch_id)
-            ),
-            f"batchid={batch_id}/role=cuts",
+            covered.withColumn("min_len", F.lit(min_len)),
+            batch_id,
+            "cuts",
         )
-        gram_table.idempotent_append(
-            new_occ.select("doc_id", "off", "h").withColumn(
-                "_batch_id", F.lit(batch_id)
-            ),
-            f"batchid={batch_id}/role=grams",
+        gram_table.append_log(
+            new_occ.select("doc_id", "off", "h"), batch_id, "grams"
         )
-        docs_table.idempotent_append(
-            batch_df.withColumn("_batch_id", F.lit(batch_id)),
-            f"batchid={batch_id}/role=docs",
-        )
+        docs_table.append_log(batch_df, batch_id, "docs")
     finally:
         batch_df.unpersist()
 
@@ -231,12 +225,4 @@ def exact_substr_stage(
             batch_df, docs_table, gram_table, cuts_table, batch_id, min_len
         )
 
-    (
-        source.writeStream.foreachBatch(process)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_foreach(source, process, checkpoint, query_name)

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..queries.fuzzy import FUZZY_MAX_DIST
 from ..pin import pin
+from .medallion import drain_foreach
 from .sinks import ParquetTable
 
 
@@ -87,8 +88,7 @@ def fuzzy_batch(
     # append-by-count), so pairs where the "seen" name equals a batch
     # name are harmless duplicates the distinct() collapses.
     if index_table.exists():
-        idx = index_table.read(spark)
-        seen = idx.where(F.col("_batch_id") < batch_id)
+        seen = index_table.read_log(spark, batch_id - 1)
         cross = (
             F.broadcast(new_tok.alias("n"))
             .join(
@@ -104,20 +104,10 @@ def fuzzy_batch(
         cand = cand.union(cross)
     cand = cand.distinct().transform(pin)
 
-    matches = _verified(cand, max_dist).withColumn(
-        "_batch_id", F.lit(batch_id)
-    )
-    matches_table.idempotent_append(
-        matches, f"batchid={batch_id}/role=matches"
-    )
-    index_table.idempotent_append(
-        new_tok.withColumn("_batch_id", F.lit(batch_id)),
-        f"batchid={batch_id}/role=tok",
-    )
-    names_table.idempotent_append(
-        batch_names.withColumn("_batch_id", F.lit(batch_id)),
-        f"batchid={batch_id}/role=names",
-    )
+    matches = _verified(cand, max_dist)
+    matches_table.append_log(matches, batch_id, "matches")
+    index_table.append_log(new_tok, batch_id, "tok")
+    names_table.append_log(batch_names, batch_id, "names")
 
 
 def fuzzy_matches_from_log(
@@ -207,12 +197,4 @@ def fuzzy_er_stage(
             max_dist,
         )
 
-    (
-        source.writeStream.foreachBatch(process)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_foreach(source, process, checkpoint, query_name)

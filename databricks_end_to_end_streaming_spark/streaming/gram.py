@@ -33,10 +33,8 @@ def gram_stage(table: ParquetTable, col: str = "embedding"):
     cells under the replay token."""
 
     def stage(batch_df: DataFrame, batch_id: int) -> None:
-        partials = covariance_cells(batch_df, col).withColumn(
-            "_batch_id", F.lit(batch_id)
-        )
-        table.idempotent_append(partials, f"batchid={batch_id}/role=gram")
+        partials = covariance_cells(batch_df, col)
+        table.append_log(partials, batch_id, "gram")
 
     return stage
 
@@ -47,9 +45,7 @@ def covariance_from_log(
     """(cov, mean, n) from the accumulated cell log — exact int64 merge,
     then the identical float finalization as the batch operator, so
     drained == one-shot bit-for-bit."""
-    log = table.read(spark)
-    if up_to_batch is not None:
-        log = log.where(F.col("_batch_id") <= up_to_batch)
+    log = table.read_log(spark, up_to_batch)
     cells = (
         log.groupBy("i", "j")
         .agg(

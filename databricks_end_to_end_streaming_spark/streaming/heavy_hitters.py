@@ -46,24 +46,19 @@ def heavy_hitters_stage(
 ):
     """foreachBatch body factory. The input batch must already be one
     item occurrence per row (explode tokens upstream). Wire as
-    ``stream.writeStream.foreachBatch(heavy_hitters_stage(...))``."""
+    ``drain_foreach(stream, heavy_hitters_stage(...), ...)``."""
 
     def stage(batch_df: DataFrame, batch_id: int) -> None:
         items = batch_df.select(F.col(item_col).alias("item"))
-        grid = cms_build(items, "item", depth, width).withColumn(
-            "_batch_id", F.lit(batch_id)
-        )
-        grid_table.idempotent_append(grid, f"batchid={batch_id}/role=cmsgrid")
+        grid = cms_build(items, "item", depth, width)
+        grid_table.append_log(grid, batch_id, "cmsgrid")
         cands = (
             items.groupBy("item")
             .agg(F.count("*").alias("batch_count"))
             .orderBy(F.desc("batch_count"), "item")
             .limit(m_per_batch)
-            .withColumn("_batch_id", F.lit(batch_id))
         )
-        candidate_table.idempotent_append(
-            cands, f"batchid={batch_id}/role=candidates"
-        )
+        candidate_table.append_log(cands, batch_id, "candidates")
 
     return stage
 

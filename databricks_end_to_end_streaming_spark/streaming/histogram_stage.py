@@ -17,10 +17,10 @@ prequential view is one filter on the log.
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..queries.analytics import hist_hourly_bins, hist_quantile_report
+from .medallion import drain_foreach
 from .sinks import ParquetTable
 
 
@@ -30,10 +30,7 @@ def histogram_stage(bins_table: ParquetTable):
 
     def stage(batch_df: DataFrame, batch_id: int) -> None:
         partial = hist_hourly_bins(batch_df)
-        bins_table.idempotent_append(
-            partial.withColumn("_batch_id", F.lit(batch_id)),
-            f"batchid={batch_id}/role=hist",
-        )
+        bins_table.append_log(partial, batch_id, "hist")
 
     return stage
 
@@ -46,9 +43,7 @@ def histogram_report_from_log(
     """Fold the bin-partial log (sum-merge per (day, bin) happens inside
     the shared report core) into the daily quantile report.
     ``up_to_batch`` gives the prequential as-of view."""
-    log = bins_table.read(spark)
-    if up_to_batch is not None:
-        log = log.where(F.col("_batch_id") <= up_to_batch)
+    log = bins_table.read_log(spark, up_to_batch)
     return hist_quantile_report(log.select("day", "bin", "cnt"))
 
 
@@ -60,12 +55,4 @@ def histogram_sketch_stage(
 ) -> None:
     """Streaming wrapper: drain available event batches into the
     incremental bin log (Trigger-Once semantics, SURVEY T1)."""
-    (
-        source.writeStream.foreachBatch(histogram_stage(bins_table))
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_foreach(source, histogram_stage(bins_table), checkpoint, query_name)

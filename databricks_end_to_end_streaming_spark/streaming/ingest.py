@@ -18,7 +18,6 @@ Deliberate improvements over the reference (documented deviations):
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
 import pyspark.sql.functions as F
@@ -34,7 +33,8 @@ from ..functions.binary import (
     glue_schema_uuid,
 )
 from ..registry import SchemaRegistry
-from .sinks import ParquetTable
+from .medallion import drain_foreach, run_continuous_foreach
+from .sinks import ParquetTable, _swap_in
 
 # Columns persisted to the raw table: the Kafka metadata the reference
 # keeps (ingest.scala:153-160) + demux id + decoded struct.
@@ -48,6 +48,9 @@ RAW_COLUMNS = [
     "valueSchemaId",
     "parsedValue",
 ]
+
+# decode rows per Python task for small demux subsets (``_decode_sized``)
+DECODE_ROWS_PER_TASK = 4096
 
 
 @dataclass
@@ -142,7 +145,7 @@ def _quarantine(
 ) -> None:
     """Land undecodable records raw: Kafka metadata, the ORIGINAL value
     bytes, the (stringified — framings differ in id type) schema id,
-    and the reason. Idempotent per (batch, reason, id) token."""
+    and the reason. Idempotent per (batch, reason, id)."""
     out = df.select(
         "key",
         "value",
@@ -155,10 +158,13 @@ def _quarantine(
         F.lit(reason).alias("quarantineReason"),
     )
     if batch_id is not None:
-        # uniform token depth: mixed-depth key=value dirs would conflict
-        # in partition discovery on read
-        token = f"batchid={batch_id}/reason={reason}/sid={sid if sid is not None else 'any'}"
-        table.idempotent_append(out, token, n_rows=n_rows)
+        # uniform part depth: every quarantine write names its sid
+        table.idempotent_append(
+            out,
+            batch_id,
+            f"reason={reason}/sid={sid if sid is not None else 'any'}",
+            n_rows=n_rows,
+        )
     else:
         table.append(out)
 
@@ -171,15 +177,12 @@ def _decode_sized(subset: DataFrame, n_rows: int | None) -> DataFrame:
     per-task fixed cost dominates the actual decode. When the stats
     pass's count says the subset is small, COALESCE (shuffle-free: each
     surviving task reads a few cached partitions locally) down to
-    ceil(n / SPARK_GRAFT_DECODE_ROWS_PER_TASK) tasks so decode batches
+    ceil(n / DECODE_ROWS_PER_TASK) tasks so decode batches
     stay Arrow-efficient. Large subsets keep their full parallelism —
     at scale the coalesce never fires and no encoded bytes ever move."""
     if n_rows is None:
         return subset
-    per_task = int(os.environ.get("SPARK_GRAFT_DECODE_ROWS_PER_TASK", "4096"))
-    if per_task <= 0:
-        return subset
-    n_tasks = max(1, -(-int(n_rows) // per_task))
+    n_tasks = max(1, -(-int(n_rows) // DECODE_ROWS_PER_TASK))
     if n_tasks >= subset.rdd.getNumPartitions():
         return subset
     return subset.coalesce(n_tasks)
@@ -343,9 +346,7 @@ def demux_decode_batch(
             if batch_id is not None:
                 jobs.append(
                     lambda out=out, sid=sid: target.idempotent_append(
-                        out,
-                        token=f"batchid={batch_id}/schemaid={sid}",
-                        n_rows=n_by_id.get(sid),
+                        out, batch_id, f"schemaid={sid}", n_rows=n_by_id.get(sid)
                     )
                 )
             else:
@@ -354,8 +355,8 @@ def demux_decode_batch(
                         out, n_rows=n_by_id.get(sid)
                     )
                 )
-        # The per-id jobs touch disjoint outputs (distinct replay-token
-        # dirs / quarantine reasons), so they can run CONCURRENTLY:
+        # The per-id jobs touch disjoint outputs (distinct per-batch
+        # part dirs / quarantine reasons), so they can run CONCURRENTLY:
         # Spark's scheduler interleaves their stages and the fixed
         # per-job latency (scheduling + commit) overlaps instead of
         # serializing — on a real cluster N schema subsets stream to the
@@ -363,14 +364,12 @@ def demux_decode_batch(
         # append txns to ONE Delta log can conflict, and the log's
         # txnAppId dedup is the idempotence story there.
         spark = batch_df.sparkSession
-        workers = int(os.environ.get("SPARK_GRAFT_DEMUX_PARALLELISM", "4"))
         sequential = (
             len(jobs) < 2
-            or workers < 2
             # batch_id=None appends go to the SAME table directory and
             # parquet jobs to one path share <path>/_temporary staging —
             # the first commit deletes it and silently drops other jobs'
-            # task output. Only the token'd per-(batch,schema) dirs of
+            # task output. Only the per-(batch,schema) dirs of
             # the idempotent path are truly disjoint.
             or batch_id is None
             or target._delta(spark)
@@ -382,12 +381,40 @@ def demux_decode_batch(
         else:
             from concurrent.futures import ThreadPoolExecutor
 
-            with ThreadPoolExecutor(min(workers, len(jobs))) as pool:
+            with ThreadPoolExecutor(len(jobs)) as pool:
                 for f in [pool.submit(fn) for fn in jobs]:
                     f.result()
     finally:
         cached.unpersist()
     return ids
+
+
+def _demux_body(
+    registry: SchemaRegistry,
+    target: ParquetTable,
+    framing: Framing | None,
+    mode: str,
+    reader_schema_id: int | str | None,
+    quarantine: ParquetTable | None,
+):
+    """The foreachBatch body both trigger modes run: the demux with the
+    micro-batch's real ``batch_id``, so replays overwrite their own
+    per-(batch, schema) output."""
+    framing = framing or confluent_framing()
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        demux_decode_batch(
+            batch_df,
+            registry,
+            framing,
+            target,
+            mode=mode,
+            batch_id=batch_id,
+            reader_schema_id=reader_schema_id,
+            quarantine=quarantine,
+        )
+
+    return process
 
 
 def ingest_avro_stream(
@@ -406,59 +433,11 @@ def ingest_avro_stream(
     SURVEY T1). ``quarantine`` captures poison pills (bad framing /
     unknown schema id) instead of failing the stream — see
     ``demux_decode_batch``."""
-    query = (
-        _demux_writer(
-            source_df,
-            registry,
-            target,
-            checkpoint,
-            framing,
-            mode,
-            query_name,
-            reader_schema_id,
-            quarantine,
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
-
-
-def _demux_writer(
-    source_df: DataFrame,
-    registry: SchemaRegistry,
-    target: ParquetTable,
-    checkpoint: str,
-    framing: Framing | None,
-    mode: str,
-    query_name: str,
-    reader_schema_id: int | str | None,
-    quarantine: ParquetTable | None,
-):
-    """The one demux writeStream builder both trigger modes share —
-    the foreachBatch body and checkpoint discipline can't drift between
-    the availableNow drain and the always-on mode (the _append_writer
-    precedent, streaming/medallion.py). Caller picks the trigger and
-    starts."""
-    framing = framing or confluent_framing()
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        demux_decode_batch(
-            batch_df,
-            registry,
-            framing,
-            target,
-            mode=mode,
-            batch_id=batch_id,
-            reader_schema_id=reader_schema_id,
-            quarantine=quarantine,
-        )
-
-    return (
-        source_df.writeStream.foreachBatch(process)
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint)
+    return drain_foreach(
+        source_df,
+        _demux_body(registry, target, framing, mode, reader_schema_id, quarantine),
+        checkpoint,
+        query_name,
     )
 
 
@@ -480,22 +459,14 @@ def ingest_avro_stream_continuous(
     completing the always-on chain next to
     ``medallion.run_pipeline_continuous``. Each timed trigger passes its
     real ``batch_id`` to the demux, so replay idempotence and the
-    per-(batch, schema) token'd append directories work exactly as in
-    the drain mode."""
-    return (
-        _demux_writer(
-            source_df,
-            registry,
-            target,
-            checkpoint,
-            framing,
-            mode,
-            query_name,
-            reader_schema_id,
-            quarantine,
-        )
-        .trigger(processingTime=processing_time)
-        .start()
+    per-(batch, schema) append directories work exactly as in the
+    drain mode."""
+    return run_continuous_foreach(
+        source_df,
+        _demux_body(registry, target, framing, mode, reader_schema_id, quarantine),
+        checkpoint,
+        query_name,
+        processing_time,
     )
 
 
@@ -516,13 +487,13 @@ def replay_quarantined(
     re-enter the SAME decode path and land in the target; records that
     still fail (bad framing, still-unknown ids) stay quarantined.
 
-    Protocol: rows replay under ``replay_batch_id`` replay tokens, so
-    re-running a replay overwrites itself instead of double-appending
-    (give each distinct replay wave its own id). The residual is staged
-    beside the quarantine and swapped in with the same aside protocol as
-    upsert/compact — a crash leaves either the old or the new dead-letter
-    set, never half. Returns {"attempted", "still_quarantined",
-    "replayed"} counts for the operator's runbook."""
+    Protocol: rows replay as batch ``replay_batch_id``, so re-running a
+    replay overwrites itself instead of double-appending (give each
+    distinct replay wave its own id). The residual is staged beside the
+    quarantine and swapped in with the same aside protocol as
+    upsert/compact (``sinks._swap_in``) — a crash leaves either the old
+    or the new dead-letter set, never half. Returns {"attempted",
+    "still_quarantined", "replayed"} counts for the operator's runbook."""
     import os
     import shutil
 
@@ -553,16 +524,14 @@ def replay_quarantined(
         reader_schema_id=reader_schema_id,
         quarantine=residual,
     )
-    still = residual.read(spark).count() if residual.exists() else 0
-    old = quarantine.path.rstrip("/") + "._old"
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    os.rename(quarantine.path, old)
     if residual.exists():
-        os.rename(staging_path, quarantine.path)
-    elif os.path.isdir(staging_path):
-        shutil.rmtree(staging_path)
-    shutil.rmtree(old)
+        still = residual.read(spark).count()
+    else:
+        still = 0
+        # nothing left quarantined: the swap drops the dead-letter table
+        if os.path.isdir(staging_path):
+            shutil.rmtree(staging_path)
+    _swap_in(staging_path, quarantine.path)
     return {
         "attempted": attempted,
         "replayed": attempted - still,

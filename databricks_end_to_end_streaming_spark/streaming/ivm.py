@@ -32,6 +32,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from .medallion import drain_foreach
 from .sinks import ParquetTable
 
 OP_COL = "op"  # 'I' insert | 'D' delete
@@ -56,11 +57,8 @@ def ivm_stage(delta_table: ParquetTable, key: str, value: str):
     partial under the replay token."""
 
     def stage(batch_df: DataFrame, batch_id: int) -> None:
-        delta_table.idempotent_append(
-            ivm_delta_partial(batch_df, key, value).withColumn(
-                "_batch_id", F.lit(batch_id)
-            ),
-            f"batchid={batch_id}/role=ivm",
+        delta_table.append_log(
+            ivm_delta_partial(batch_df, key, value), batch_id, "ivm"
         )
 
     return stage
@@ -73,9 +71,7 @@ def ivm_multiplicities(
 ) -> DataFrame:
     """Fold the partial log to surviving net multiplicities per
     (k, v). ``up_to_batch`` gives the prequential as-of view."""
-    log = delta_table.read(spark)
-    if up_to_batch is not None:
-        log = log.where(F.col("_batch_id") <= up_to_batch)
+    log = delta_table.read_log(spark, up_to_batch)
     return (
         log.groupBy("k", "v")
         .agg(F.sum("net").cast("long").alias("net"))
@@ -132,12 +128,4 @@ def ivm_maintenance_stage(
 ) -> None:
     """Streaming wrapper: drain available CDC batches into the
     multiplicity log (Trigger-Once semantics, SURVEY T1)."""
-    (
-        source.writeStream.foreachBatch(ivm_stage(delta_table, key, value))
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_foreach(source, ivm_stage(delta_table, key, value), checkpoint, query_name)

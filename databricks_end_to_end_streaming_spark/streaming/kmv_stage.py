@@ -24,11 +24,11 @@ prequential view is one filter on the log.
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.kmv import bottom_k, kmv_sketch
 from ..queries.kmv import K_USERS, kmv_group_report
+from .medallion import drain_foreach
 from .sinks import ParquetTable
 
 
@@ -48,10 +48,7 @@ def kmv_stage(
 
     def stage(batch_df: DataFrame, batch_id: int) -> None:
         partial = kmv_sketch(batch_df, key, groups, k)
-        sketch_table.idempotent_append(
-            partial.withColumn("_batch_id", F.lit(batch_id)),
-            f"batchid={batch_id}/role=kmv",
-        )
+        sketch_table.append_log(partial, batch_id, "kmv")
 
     return stage
 
@@ -67,9 +64,7 @@ def kmv_report_from_log(
     merge over every appended partial) and report through the shared
     batch core. ``up_to_batch`` gives the prequential as-of view."""
     groups = group_cols if group_cols is not None else ["event_type"]
-    log = sketch_table.read(spark)
-    if up_to_batch is not None:
-        log = log.where(F.col("_batch_id") <= up_to_batch)
+    log = sketch_table.read_log(spark, up_to_batch)
     hashes = log.select(*groups, "h").distinct()
     return kmv_group_report(bottom_k(hashes, groups, k), groups, k)
 
@@ -82,12 +77,4 @@ def kmv_sketch_stage(
 ) -> None:
     """Streaming wrapper: drain available event batches into the
     incremental sketch log (Trigger-Once semantics, SURVEY T1)."""
-    (
-        source.writeStream.foreachBatch(kmv_stage(sketch_table))
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_foreach(source, kmv_stage(sketch_table), checkpoint, query_name)

@@ -28,6 +28,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..queries.text import kn_instances, kn_scores_from
+from .medallion import drain_foreach
 from .sinks import ParquetTable
 
 
@@ -39,15 +40,11 @@ def kn_lm_stage(inst_table: ParquetTable, counts_table: ParquetTable):
 
     def stage(batch_df: DataFrame, batch_id: int) -> None:
         inst = kn_instances(batch_df)
-        inst_table.idempotent_append(
-            inst.withColumn("_batch_id", F.lit(batch_id)),
-            f"batchid={batch_id}/role=inst",
-        )
-        counts_table.idempotent_append(
-            inst.groupBy("w1", "w2", "w3")
-            .agg(F.count("*").alias("c3"))
-            .withColumn("_batch_id", F.lit(batch_id)),
-            f"batchid={batch_id}/role=counts",
+        inst_table.append_log(inst, batch_id, "inst")
+        counts_table.append_log(
+            inst.groupBy("w1", "w2", "w3").agg(F.count("*").alias("c3")),
+            batch_id,
+            "counts",
         )
 
     return stage
@@ -62,11 +59,8 @@ def kn_scores_from_log(
     """Per-doc KN scores from the accumulated logs — shared scoring
     core, so drained == batch bit-for-bit. With ``up_to_batch`` only
     batches <= that id contribute (prequential view)."""
-    inst = inst_table.read(spark)
-    counts = counts_table.read(spark)
-    if up_to_batch is not None:
-        inst = inst.where(F.col("_batch_id") <= up_to_batch)
-        counts = counts.where(F.col("_batch_id") <= up_to_batch)
+    inst = inst_table.read_log(spark, up_to_batch)
+    counts = counts_table.read_log(spark, up_to_batch)
     tri = counts.groupBy("w1", "w2", "w3").agg(
         F.sum("c3").cast("long").alias("c3")
     )
@@ -83,17 +77,7 @@ def kn_lm_index_stage(
 ) -> None:
     """Streaming wrapper: drain available document batches into the
     incremental KN model (Trigger-Once semantics, SURVEY T1)."""
-    (
-        source.writeStream.foreachBatch(
-            kn_lm_stage(inst_table, counts_table)
-        )
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_foreach(source, kn_lm_stage(inst_table, counts_table), checkpoint, query_name)
 
 
 def ccnet_buckets_from_log(

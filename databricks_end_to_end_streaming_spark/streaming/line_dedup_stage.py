@@ -30,6 +30,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..queries.dedup import cleaned_lines_doc, line_segments
+from .medallion import drain_foreach
 from .sinks import ParquetTable
 
 
@@ -47,7 +48,7 @@ def line_dedup_batch(
     flagged = segs.withColumn("first_in_batch", F.row_number().over(w) == 1)
 
     if index_table.exists():
-        index = index_table.read(spark).where(F.col("_batch_id") < batch_id)
+        index = index_table.read_log(spark, batch_id - 1)
         batch_hashes = flagged.select("h").distinct()
         seen = (
             index.join(F.broadcast(batch_hashes), "h", "leftsemi")
@@ -63,18 +64,14 @@ def line_dedup_batch(
         "kept", F.col("first_in_batch") & F.col("_seen").isNull()
     ).persist()
     try:
-        out_table.idempotent_append(
+        out_table.append_log(
             cleaned_lines_doc(
                 flagged.select("doc_id", "seg_idx", "seg", "kept")
-            ).withColumn("_batch_id", F.lit(batch_id)),
-            f"batchid={batch_id}/role=cleaned",
+            ),
+            batch_id,
+            "cleaned",
         )
-        index_table.idempotent_append(
-            flagged.where("kept")
-            .select("h")
-            .withColumn("_batch_id", F.lit(batch_id)),
-            f"batchid={batch_id}/role=index",
-        )
+        index_table.append_log(flagged.where("kept").select("h"), batch_id, "index")
     finally:
         flagged.unpersist()
 
@@ -94,9 +91,7 @@ def cleaned_from_log(
     up_to_batch: int | None = None,
 ) -> DataFrame:
     """The accumulated cleaned corpus (prequential with ``up_to_batch``)."""
-    df = out_table.read(spark)
-    if up_to_batch is not None:
-        df = df.where(F.col("_batch_id") <= up_to_batch)
+    df = out_table.read_log(spark, up_to_batch)
     return df.drop("_batch_id")
 
 
@@ -109,12 +104,9 @@ def line_dedup_index_stage(
 ) -> None:
     """Streaming wrapper: drain available batches (Trigger-Once, SURVEY
     T1) through the incremental line dedup."""
-    (
-        source.writeStream.foreachBatch(line_dedup_stage(out_table, index_table))
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain_foreach(
+        source,
+        line_dedup_stage(out_table, index_table),
+        checkpoint,
+        query_name,
     )

@@ -85,6 +85,38 @@ def _append_writer(
     return w
 
 
+def _foreach_writer(
+    source: DataFrame, body, checkpoint: str, query_name: str, output_mode: str
+):
+    """The one foreachBatch writer every trigger mode shares — the body's
+    checkpoint discipline can't drift between the availableNow drain
+    and the always-on mode. Caller picks the trigger and starts."""
+    return (
+        source.writeStream.foreachBatch(body)
+        .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint)
+        .queryName(query_name)
+    )
+
+
+def _drain(writer):
+    """Start ``writer`` with trigger(availableNow=True), block until it
+    has drained what was available, and return the finished query."""
+    query = writer.trigger(availableNow=True).start()
+    query.awaitTermination()
+    return query
+
+
+def drain_foreach(source: DataFrame, body, checkpoint: str, query_name: str):
+    """Drain ``source`` through the foreachBatch ``body`` (Trigger-Once
+    semantics, SURVEY T1) and return the finished ``StreamingQuery``.
+    Every stage's streaming wrapper is this call around its body; the
+    body follows the replay-log protocol (``ParquetTable.append_log`` /
+    ``idempotent_append``), so at-least-once foreachBatch still yields
+    exactly-once tables."""
+    return _drain(_foreach_writer(source, body, checkpoint, query_name, "append"))
+
+
 def _run_append(
     df: DataFrame,
     target: ParquetTable,
@@ -100,12 +132,7 @@ def _run_append(
         from .observe import observe_stream
 
         df = observe_stream(df, query_name, observe_rules)
-    q = (
-        _append_writer(df, target, checkpoint, query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    q = _drain(_append_writer(df, target, checkpoint, query_name))
     if observe_rules is not None:
         from .observe import progress_metrics
 
@@ -141,21 +168,18 @@ def run_continuous_foreach(
     query_name: str,
     processing_time: str = "500 milliseconds",
 ):
-    """Always-on counterpart of the availableNow foreachBatch drains:
-    start ``stage`` (a foreachBatch body following the replay-token
-    protocol — dictscan_stage, vocab_stage, bloom/ppjoin/... all
-    qualify) under a processing-time trigger and return the live
-    ``StreamingQuery`` handle (caller stops it). The replay-token
-    protocol is trigger-agnostic by design: a timed trigger that
-    re-runs after a crash replays the same batch id, and the stage's
-    idempotent_append overwrites its own token — soaked end-to-end in
+    """Always-on counterpart of :func:`drain_foreach`: start ``stage``
+    (a foreachBatch body following the replay-log protocol —
+    dictscan_stage, vocab_stage, bloom/ppjoin/... all qualify) under a
+    processing-time trigger and return the live ``StreamingQuery``
+    handle (caller stops it). The replay-log protocol is
+    trigger-agnostic by design: a timed trigger that re-runs after a
+    crash replays the same batch id, and the stage's idempotent append
+    overwrites its own batch directory — soaked end-to-end in
     tests/test_soak_timed_stages.py by deleting the newest checkpoint
     commit marker and restarting."""
     return (
-        source.writeStream.foreachBatch(stage)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
+        _foreach_writer(source, stage, checkpoint, query_name, "append")
         .trigger(processingTime=processing_time)
         .start()
     )
@@ -248,12 +272,7 @@ def _gold_writer(
     def overwrite(batch_df: DataFrame, _batch_id: int) -> None:
         gold.overwrite_atomic(batch_df)
 
-    return (
-        agg.writeStream.foreachBatch(overwrite)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-    )
+    return _foreach_writer(agg, overwrite, checkpoint, query_name, "complete")
 
 
 def gold_stage(
@@ -265,12 +284,7 @@ def gold_stage(
 ) -> None:
     """Complete-mode aggregation drain (K3): one availableNow pass over
     what silver holds."""
-    (
-        _gold_writer(spark, silver, gold, checkpoint, cutoff, "gold_layer")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain(_gold_writer(spark, silver, gold, checkpoint, cutoff, "gold_layer"))
 
 
 def upsert_stage(
@@ -303,15 +317,7 @@ def upsert_stage(
             updates = batch_df.dropDuplicates(keys)
         target.upsert(batch_df.sparkSession, updates, keys)
 
-    (
-        source.writeStream.foreachBatch(merge)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain(_foreach_writer(source, merge, checkpoint, query_name, "update"))
 
 
 def enrich_transform(df: DataFrame, dim: DataFrame, on: str = "productId") -> DataFrame:
@@ -440,27 +446,16 @@ def dq_split_stage(
         ok = F.coalesce(predicate, F.lit(False))
         batch_df.persist()
         try:
-            good.idempotent_append(
-                batch_df.where(ok), f"batchid={batch_id}/side=good"
-            )
+            good.idempotent_append(batch_df.where(ok), batch_id, "side=good")
             quarantine.idempotent_append(
-                batch_df.where(~ok).withColumn(
-                    "_dq_batch_id", F.lit(batch_id)
-                ),
-                f"batchid={batch_id}/side=quarantine",
+                batch_df.where(~ok).withColumn("_dq_batch_id", F.lit(batch_id)),
+                batch_id,
+                "side=quarantine",
             )
         finally:
             batch_df.unpersist()
 
-    (
-        source.writeStream.foreachBatch(split)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_foreach(source, split, checkpoint, query_name)
 
 
 def gold_incremental_stage(
@@ -490,14 +485,8 @@ def gold_incremental_stage(
             batch_df.sparkSession, batch_df, ["day_start", "type", "color", "size"]
         )
 
-    (
-        agg.writeStream.foreachBatch(merge)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .queryName("gold_incremental_layer")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _drain(
+        _foreach_writer(agg, merge, checkpoint, "gold_incremental_layer", "update")
     )
 
 

@@ -62,13 +62,11 @@ def moments_stage(
 ):
     """foreachBatch body factory: append this batch's partial moments
     under the replay token. Wire as
-    ``stream.writeStream.foreachBatch(moments_stage(...))``."""
+    ``drain_foreach(stream, moments_stage(...), ...)``."""
 
     def stage(batch_df: DataFrame, batch_id: int) -> None:
-        partials = partial_moments(batch_df, key, x, y).withColumn(
-            "_batch_id", F.lit(batch_id)
-        )
-        table.idempotent_append(partials, f"batchid={batch_id}/role=moments")
+        partials = partial_moments(batch_df, key, x, y)
+        table.append_log(partials, batch_id, "moments")
 
     return stage
 

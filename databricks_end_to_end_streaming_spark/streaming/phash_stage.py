@@ -32,12 +32,7 @@ def phash_stage(sig_table: ParquetTable):
     append the signatures (2 longs per image)."""
 
     def stage(batch_df: DataFrame, batch_id: int) -> None:
-        sig_table.idempotent_append(
-            perceptual_hashes(batch_df).withColumn(
-                "_batch_id", F.lit(batch_id)
-            ),
-            f"batchid={batch_id}/role=phash",
-        )
+        sig_table.append_log(perceptual_hashes(batch_df), batch_id, "phash")
 
     return stage
 
@@ -52,9 +47,7 @@ def phash_pairs_from_log(
     """Banded Hamming pairing over the folded signature log — the batch
     query's exact semantics (``up_to_batch`` gives the prequential
     as-of view)."""
-    log = sig_table.read(spark)
-    if up_to_batch is not None:
-        log = log.where(F.col("_batch_id") <= up_to_batch)
+    log = sig_table.read_log(spark, up_to_batch)
     return (
         hamming_neardup_pairs(
             log.select("media_id", sig).dropDuplicates(["media_id"]),
@@ -83,8 +76,7 @@ def pairs_with_batch(
     is |batch-bands| x matching log bands; history-vs-history candidates
     are never generated, let alone Hamming-verified."""
     log = (
-        sig_table.read(spark)
-        .where(F.col("_batch_id") <= batch_id)
+        sig_table.read_log(spark, batch_id)
         .select("media_id", sig)
         .dropDuplicates(["media_id"])
     )

@@ -39,6 +39,7 @@ from ..queries.dedup import (
     ppjoin_position_ok,
     ppjoin_prefix_len,
 )
+from .medallion import drain_foreach
 from .sinks import ParquetTable, exclude_batch
 
 
@@ -71,9 +72,7 @@ def exact_neardup_batch(
     spark = batch_df.sparkSession
     batch_df.persist()
     try:
-        new_prefix = hash_order_prefix_rows(
-            doc_shingle_arrays(batch_df)
-        ).withColumn("_batch_id", F.lit(batch_id))
+        new_prefix = hash_order_prefix_rows(doc_shingle_arrays(batch_df))
 
         # PPJoin length filter: size-incompatible blockmates can never
         # reach the threshold (t*|x| <= |y| <= |x|/t) — integer
@@ -102,9 +101,7 @@ def exact_neardup_batch(
         # new-vs-seen: broadcast the BATCH side over the accumulated
         # index (strictly older batches — replay-safe)
         if prefix_table.exists():
-            seen = prefix_table.read(spark).where(
-                F.col("_batch_id") < batch_id
-            )
+            seen = prefix_table.read_log(spark, batch_id - 1)
             cross = (
                 F.broadcast(new_prefix.alias("n"))
                 .join(
@@ -138,17 +135,11 @@ def exact_neardup_batch(
         pairs = (
             exact_pair_scores(cand, corpus)
             .where(F.col("jaccard") >= threshold)
-            .withColumn("_batch_id", F.lit(batch_id))
         )
 
-        pairs_table.idempotent_append(pairs, f"batchid={batch_id}/role=pairs")
-        prefix_table.idempotent_append(
-            new_prefix, f"batchid={batch_id}/role=prefix"
-        )
-        docs_table.idempotent_append(
-            batch_df.withColumn("_batch_id", F.lit(batch_id)),
-            f"batchid={batch_id}/role=docs",
-        )
+        pairs_table.append_log(pairs, batch_id, "pairs")
+        prefix_table.append_log(new_prefix, batch_id, "prefix")
+        docs_table.append_log(batch_df, batch_id, "docs")
     finally:
         batch_df.unpersist()
 
@@ -158,9 +149,7 @@ def exact_pairs_from_log(
 ) -> DataFrame:
     """Accumulated verified pairs (the exact near-dup set over every
     ingested document); prequential with ``up_to_batch``."""
-    log = pairs_table.read(spark)
-    if up_to_batch is not None:
-        log = log.where(F.col("_batch_id") <= up_to_batch)
+    log = pairs_table.read_log(spark, up_to_batch)
     return log.select(
         "doc_a", "doc_b", "n_sh_a", "n_sh_b", "overlap", "jaccard"
     )
@@ -182,12 +171,4 @@ def exact_neardup_stage(
             batch_df, docs_table, prefix_table, pairs_table, batch_id, threshold
         )
 
-    (
-        source.writeStream.foreachBatch(process)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_foreach(source, process, checkpoint, query_name)

@@ -39,10 +39,8 @@ def sample_stage(table: ParquetTable, group: str, id_col: str, k: int):
     rows (by md5 of ``id_col``) under the replay token."""
 
     def stage(batch_df: DataFrame, batch_id: int) -> None:
-        partial = _ranked(batch_df, group, id_col, k).withColumn(
-            "_batch_id", F.lit(batch_id)
-        )
-        table.idempotent_append(partial, f"batchid={batch_id}/role=sample")
+        partial = _ranked(batch_df, group, id_col, k)
+        table.append_log(partial, batch_id, "sample")
 
     return stage
 
@@ -96,10 +94,8 @@ def weighted_sample_stage(
     ``sample_stage`` for importance-/quality-weighted corpus sampling."""
 
     def stage(batch_df: DataFrame, batch_id: int) -> None:
-        partial = _weighted_ranked(
-            batch_df, group, id_col, weight_col, k
-        ).withColumn("_batch_id", F.lit(batch_id))
-        table.idempotent_append(partial, f"batchid={batch_id}/role=wsample")
+        partial = _weighted_ranked(batch_df, group, id_col, weight_col, k)
+        table.append_log(partial, batch_id, "wsample")
 
     return stage
 

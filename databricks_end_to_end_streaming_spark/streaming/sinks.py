@@ -8,10 +8,19 @@ contract on a parquet directory:
 * append with schema evolution  -> each append writes its own files;
   reads use mergeSchema so the table union-widens (v1 rows read NULL for
   v2-only columns — exactly Delta's mergeSchema semantics for our case);
-* idempotent foreachBatch appends -> each (batch_id, partition_key)
-  lands in a deterministic subdirectory written with overwrite, so a
-  replayed micro-batch overwrites itself instead of double-appending
-  (the parquet stand-in for Delta's txnAppId/txnVersion — SURVEY T7);
+* the replay-log protocol (exactly-once tables from at-least-once
+  foreachBatch — SURVEY T7), owned by three methods and spelled out
+  nowhere else:
+  - ``idempotent_append(df, batch_id, part)`` writes a micro-batch's
+    output to the deterministic ``batchid={batch_id}/{part}`` directory
+    with overwrite, so a replayed batch overwrites itself instead of
+    double-appending (Delta mode: ``txnAppId=<path>#<part>``,
+    ``txnVersion=<batch_id>``);
+  - ``append_log(df, batch_id, role)`` is the stage-log form: stamp the
+    ``_batch_id`` data column, then ``idempotent_append`` under
+    ``role={role}``;
+  - ``read_log(spark, up_to_batch)`` is the as-of read: rows of batches
+    ``<= up_to_batch`` (all rows when None);
 * batch & streaming reads of the same table.
 
 On a Delta-enabled cluster the class upgrades ITSELF: every entry point
@@ -24,7 +33,6 @@ compaction. Call sites don't change; the same suite runs in both modes
 Set SPARK_GRAFT_TABLE_FORMAT=parquet to pin the stand-in on a
 Delta-enabled cluster (or =delta to fail fast when Delta is missing).
 """
-
 from __future__ import annotations
 
 import os
@@ -35,6 +43,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 _DELTA_OK: bool | None = None
+
+# write-time file sizing target (``ParquetTable._sized``)
+TARGET_FILE_ROWS = 1_000_000
 
 
 def delta_available(spark: SparkSession) -> bool:
@@ -67,27 +78,6 @@ def delta_available(spark: SparkSession) -> bool:
             "with configure_spark_with_delta_pip / the Delta extension)"
         )
     return _DELTA_OK
-
-
-def parse_txn_token(token: str) -> tuple[str, int]:
-    """Map an idempotent-append replay token (``batchid=7/schemaid=2``,
-    ``batchid=7/side=good`` — streaming/ingest.py:121,
-    streaming/medallion.py:305) to Delta's (txnAppId, txnVersion) pair:
-    the batch id is the monotonically-increasing version, everything
-    else identifies the writer stream. Pure + deterministic so replays
-    of the same token always collide (which is the point)."""
-    parts = [p for p in token.split("/") if p]
-    version: int | None = None
-    app_bits: list[str] = []
-    for p in parts:
-        k, _, v = p.partition("=")
-        if k == "batchid" and version is None:
-            version = int(v)
-        else:
-            app_bits.append(p)
-    if version is None:
-        raise ValueError(f"replay token {token!r} carries no batchid=N part")
-    return ("/".join(app_bits) or "default", version)
 
 
 def batch_id_col(df: DataFrame) -> F.Column:
@@ -154,6 +144,27 @@ def exclude_batch(
             )
         return df
     return df.where(~col.eqNullSafe(F.lit(batch_id)))
+
+
+def _swap_in(staging: str, live: str) -> None:
+    """Replace directory ``live`` with ``staging``: rename the live dir
+    aside to ``<live>._old``, rename staging in, drop the aside copy. A
+    crash in either window leaves a state ``ParquetTable._recover_swap``
+    heals on the next access: only the aside copy (restored as the
+    table) or the aside copy beside the new dir (dropped). A missing
+    ``live`` is a first write (staging just moves in); a missing
+    ``staging`` leaves no table behind (the new content is empty).
+    Relies on same-FS rename atomicity — local/POSIX only; on an object
+    store the Delta transaction log replaces this protocol entirely."""
+    old = live.rstrip("/") + "._old"
+    if os.path.exists(old):
+        shutil.rmtree(old)
+    if os.path.isdir(live):
+        os.rename(live, old)
+    if os.path.isdir(staging):
+        os.rename(staging, live)
+    if os.path.isdir(old):
+        shutil.rmtree(old)
 
 
 class ParquetTable:
@@ -231,7 +242,7 @@ class ParquetTable:
         """Write-time small-file control: when the caller already knows
         the row count (streaming demux plans from a stats pass that has
         per-subset counts for free), size the output to
-        ceil(n_rows / SPARK_GRAFT_TARGET_FILE_ROWS) files instead of one
+        ceil(n_rows / TARGET_FILE_ROWS) files instead of one
         file per upstream partition. A micro-batch of 25k rows on a
         32-slot session otherwise writes 32 tiny parquet files per
         trigger — the classic streaming small-file problem that degrades
@@ -247,10 +258,7 @@ class ParquetTable:
         that don't know their count (n_rows=None) are untouched."""
         if n_rows is None:
             return df
-        target = int(os.environ.get("SPARK_GRAFT_TARGET_FILE_ROWS", "1000000"))
-        if target <= 0:
-            return df
-        n_files = max(1, -(-int(n_rows) // target))
+        n_files = max(1, -(-int(n_rows) // TARGET_FILE_ROWS))
         if n_files >= df.sparkSession.sparkContext.defaultParallelism:
             return df
         return df.repartition(n_files)
@@ -270,25 +278,55 @@ class ParquetTable:
         w.parquet(self.path)
 
     def idempotent_append(
-        self, df: DataFrame, token: str, n_rows: int | None = None
+        self,
+        df: DataFrame,
+        batch_id: int,
+        part: str,
+        n_rows: int | None = None,
     ) -> None:
-        """Append keyed by a replay token (e.g. 'batchid=7/schemaid=2'):
-        a re-run with the same token overwrites its own output. Delta
-        mode maps the token to txnAppId/txnVersion, whose log-level
-        dedup is the real transactional form of the same contract."""
+        """Append ``df`` as micro-batch ``batch_id``'s output for
+        ``part`` (a ``key=value[/key=value]`` writer id such as
+        ``schemaid=2``): it lands in ``batchid={batch_id}/{part}`` with
+        overwrite, so a re-run of the same (batch, part) replaces its own
+        output. Delta mode hands the pair to txnAppId/txnVersion, whose
+        log-level dedup is the real transactional form of the same
+        contract. Every part of one table must have the same depth:
+        mixed-depth key=value dirs conflict in partition discovery."""
         self._recover_swap()
         df = self._sized(df, n_rows)
         if self._delta(df.sparkSession):
-            app_id, version = parse_txn_token(token)
             self._delta_write(
                 df,
                 "append",
                 mergeSchema="true",
-                txnAppId=f"{self.path}#{app_id}",
-                txnVersion=str(version),
+                txnAppId=f"{self.path}#{part}",
+                txnVersion=str(batch_id),
             )
             return
-        df.write.mode("overwrite").parquet(os.path.join(self.path, token))
+        df.write.mode("overwrite").parquet(
+            os.path.join(self.path, f"batchid={batch_id}", part)
+        )
+
+    def append_log(self, df: DataFrame, batch_id: int, role: str) -> None:
+        """Append one micro-batch's rows to a stage log: stamp the
+        ``_batch_id`` data column (what ``read_log`` and replay
+        exclusion filter on in both storage modes; an int literal, so
+        every file of the log merges to one type) and write under the
+        ``role={role}`` part."""
+        self.idempotent_append(
+            df.withColumn("_batch_id", F.lit(batch_id)), batch_id, f"role={role}"
+        )
+
+    def read_log(
+        self, spark: SparkSession, up_to_batch: int | None = None
+    ) -> DataFrame:
+        """The as-of read of a stage log: rows of batches
+        ``<= up_to_batch``, or the whole log when None. "Strictly before
+        batch b" is ``up_to_batch=b - 1``."""
+        log = self.read(spark)
+        if up_to_batch is not None:
+            log = log.where(F.col("_batch_id") <= up_to_batch)
+        return log
 
     def overwrite(self, df: DataFrame) -> None:
         """Full rewrite — complete-output-mode sink (gold, SURVEY K3)."""
@@ -299,27 +337,14 @@ class ParquetTable:
         df.write.mode("overwrite").parquet(self.path)
 
     def _staged_swap_write(self, df: DataFrame) -> None:
-        """Atomic full-table rewrite: stage to a sibling dir, rename the
-        live dir aside, rename staging in, drop the aside copy. A crash
-        in any window leaves either the old or the new table intact and
-        recoverable (``_recover_swap`` heals the in-between states on the
-        next access). Relies on same-FS rename atomicity — local/POSIX
-        only; on an object store the Delta transaction log replaces this
-        protocol entirely."""
+        """Atomic full-table rewrite: write ``df`` (in the table's
+        partition layout) to a sibling staging dir, then ``_swap_in``."""
         staging = self.path.rstrip("/") + "._staging"
         w = df.write.mode("overwrite")
         if self.partition_by:
             w = w.partitionBy(*self.partition_by)
         w.parquet(staging)
-        old = self.path.rstrip("/") + "._old"
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        if os.path.isdir(self.path):
-            os.rename(self.path, old)
-            os.rename(staging, self.path)
-            shutil.rmtree(old)
-        else:
-            os.rename(staging, self.path)
+        _swap_in(staging, self.path)
 
     def overwrite_atomic(self, df: DataFrame) -> None:
         """Complete-mode rewrite that CONCURRENT READERS can live with:
@@ -634,12 +659,7 @@ class ParquetTable:
                 self.path.rstrip("/") + f"._staging_{key}={value}"
             )
             df.repartition(n_parts).write.mode("overwrite").parquet(staging)
-            old = pdir + "._old"
-            if os.path.exists(old):
-                shutil.rmtree(old)
-            os.rename(pdir, old)
-            os.rename(staging, pdir)
-            shutil.rmtree(old)
+            _swap_in(staging, pdir)
             after = [
                 f
                 for r, _d, fs in os.walk(pdir)
@@ -718,18 +738,7 @@ class ParquetTable:
             df = df.repartition(n_parts, *self.partition_by)
         else:
             df = df.repartition(n_parts)
-        staging = self.path.rstrip("/") + "._staging"
-        w = df.write.mode("overwrite")
-        if self.partition_by:
-            w = w.partitionBy(*self.partition_by)
-        w.parquet(staging)
-
-        old = self.path.rstrip("/") + "._old"
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        os.rename(self.path, old)
-        os.rename(staging, self.path)
-        shutil.rmtree(old)
+        self._staged_swap_write(df)
         return {
             "files_before": len(before),
             "files_after": len(_files(self.path)),

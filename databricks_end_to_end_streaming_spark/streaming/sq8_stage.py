@@ -25,6 +25,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..queries.similarity import sq8_coded, sq8_dim_stats, sq8_fp_coords
+from .medallion import drain_foreach
 from .sinks import ParquetTable
 
 
@@ -33,11 +34,8 @@ def sq8_stats_stage(stats_table: ParquetTable):
     partial under the replay token."""
 
     def stage(batch_df: DataFrame, batch_id: int) -> None:
-        stats_table.idempotent_append(
-            sq8_dim_stats(sq8_fp_coords(batch_df)).withColumn(
-                "_batch_id", F.lit(batch_id)
-            ),
-            f"batchid={batch_id}/role=dimstats",
+        stats_table.append_log(
+            sq8_dim_stats(sq8_fp_coords(batch_df)), batch_id, "dimstats"
         )
 
     return stage
@@ -51,9 +49,7 @@ def sq8_stats_from_log(
     """Folded (i, mn, mx) calibration from the accumulated partials.
     With ``up_to_batch`` only batches <= that id contribute — the
     calibration-epoch / drift-inspection view."""
-    log = stats_table.read(spark)
-    if up_to_batch is not None:
-        log = log.where(F.col("_batch_id") <= up_to_batch)
+    log = stats_table.read_log(spark, up_to_batch)
     return log.groupBy("i").agg(
         F.min("mn").alias("mn"), F.max("mx").alias("mx")
     )
@@ -81,12 +77,4 @@ def sq8_calibration_stage(
 ) -> None:
     """Streaming wrapper: drain available embedding batches into the
     d-row stats log (Trigger-Once semantics, SURVEY T1)."""
-    (
-        source.writeStream.foreachBatch(sq8_stats_stage(stats_table))
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_foreach(source, sq8_stats_stage(stats_table), checkpoint, query_name)

@@ -19,7 +19,6 @@ prequential view is one filter on the log.
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..queries.analytics import ts_daily_cents, ts_pattern_topk_from_daily
@@ -31,10 +30,7 @@ def timeseries_stage(daily_table: ParquetTable):
 
     def stage(batch_df: DataFrame, batch_id: int) -> None:
         partial = ts_daily_cents(batch_df)
-        daily_table.idempotent_append(
-            partial.withColumn("_batch_id", F.lit(batch_id)),
-            f"batchid={batch_id}/role=tsdaily",
-        )
+        daily_table.append_log(partial, batch_id, "tsdaily")
 
     return stage
 
@@ -47,9 +43,7 @@ def timeseries_topk_from_log(
     """Fold the daily-partial log into the pattern-search top-k
     (sum-merge per (user, day) happens inside the shared core).
     ``up_to_batch`` gives the prequential as-of view."""
-    log = daily_table.read(spark)
-    if up_to_batch is not None:
-        log = log.where(F.col("_batch_id") <= up_to_batch)
+    log = daily_table.read_log(spark, up_to_batch)
     return ts_pattern_topk_from_daily(
         log.select("user_id", "day", "cents")
     )

@@ -33,10 +33,7 @@ def videohash_stage(sig_table: ParquetTable):
     and append the signatures (2 longs per frame)."""
 
     def stage(batch_df: DataFrame, batch_id: int) -> None:
-        sig_table.idempotent_append(
-            frame_hashes(batch_df).withColumn("_batch_id", F.lit(batch_id)),
-            f"batchid={batch_id}/role=videohash",
-        )
+        sig_table.append_log(frame_hashes(batch_df), batch_id, "videohash")
 
     return stage
 
@@ -46,9 +43,7 @@ def _folded_log(
     sig_table: ParquetTable,
     up_to_batch: int | None,
 ) -> DataFrame:
-    log = sig_table.read(spark)
-    if up_to_batch is not None:
-        log = log.where(F.col("_batch_id") <= up_to_batch)
+    log = sig_table.read_log(spark, up_to_batch)
     return log.select("media_id", "frame_idx", "ahash", "dhash").dropDuplicates(
         ["media_id", "frame_idx"]
     )

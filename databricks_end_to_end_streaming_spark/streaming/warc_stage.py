@@ -22,10 +22,10 @@ append on both tables.
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..queries.web import docs_from_warc_responses, domain_lang_partials
+from .medallion import drain_foreach
 from .sinks import ParquetTable
 
 
@@ -43,16 +43,8 @@ def warc_ingest_batch(
     docs = docs_from_warc_responses(records_df)
     docs.persist()
     try:
-        docs_table.idempotent_append(
-            docs.withColumn("_batch_id", F.lit(batch_id)),
-            f"batchid={batch_id}/role=warcdocs",
-        )
-        partials_table.idempotent_append(
-            domain_lang_partials(docs).withColumn(
-                "_batch_id", F.lit(batch_id)
-            ),
-            f"batchid={batch_id}/role=domains",
-        )
+        docs_table.append_log(docs, batch_id, "warcdocs")
+        partials_table.append_log(domain_lang_partials(docs), batch_id, "domains")
     finally:
         docs.unpersist()
 
@@ -83,12 +75,4 @@ def warc_first_mile_stage(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         warc_ingest_batch(batch_df, docs_table, partials_table, batch_id)
 
-    (
-        source.writeStream.foreachBatch(process)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_foreach(source, process, checkpoint, query_name)

@@ -23,6 +23,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..queries.web import domain_accounting_rollup, domain_lang_partials
+from .medallion import drain_foreach
 from .sinks import ParquetTable
 
 
@@ -31,12 +32,7 @@ def domain_accounting_stage(partials_table: ParquetTable):
     (domain, lang) accounting partial under the replay token."""
 
     def stage(batch_df: DataFrame, batch_id: int) -> None:
-        partials_table.idempotent_append(
-            domain_lang_partials(batch_df).withColumn(
-                "_batch_id", F.lit(batch_id)
-            ),
-            f"batchid={batch_id}/role=domains",
-        )
+        partials_table.append_log(domain_lang_partials(batch_df), batch_id, "domains")
 
     return stage
 
@@ -49,9 +45,7 @@ def domain_accounting_from_log(
     """Domain accounting report from the accumulated partials — shared
     rollup core, so drained == batch bit-for-bit. With ``up_to_batch``
     only batches <= that id contribute (the growth trajectory view)."""
-    log = partials_table.read(spark)
-    if up_to_batch is not None:
-        log = log.where(F.col("_batch_id") <= up_to_batch)
+    log = partials_table.read_log(spark, up_to_batch)
     folded = log.groupBy("domain", "lang").agg(
         F.sum("n_docs").alias("n_docs"),
         F.sum("n_tokens").alias("n_tokens"),
@@ -68,12 +62,9 @@ def domain_monitor_stage(
 ) -> None:
     """Streaming wrapper: drain available document batches into the
     (domain, lang) partial log (Trigger-Once semantics, SURVEY T1)."""
-    (
-        source.writeStream.foreachBatch(domain_accounting_stage(partials_table))
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain_foreach(
+        source,
+        domain_accounting_stage(partials_table),
+        checkpoint,
+        query_name,
     )

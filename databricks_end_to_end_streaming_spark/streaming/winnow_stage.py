@@ -35,6 +35,7 @@ from ..queries.dedup import (
     winnow_overlap_from_fps,
     winnow_score_pairs,
 )
+from .medallion import drain_foreach
 from .sinks import ParquetTable
 
 
@@ -43,12 +44,7 @@ def winnow_stage(fp_table: ParquetTable):
     append the fingerprint rows."""
 
     def stage(batch_df: DataFrame, batch_id: int) -> None:
-        fp_table.idempotent_append(
-            winnow_fingerprints(batch_df).withColumn(
-                "_batch_id", F.lit(batch_id)
-            ),
-            f"batchid={batch_id}/role=winnow",
-        )
+        fp_table.append_log(winnow_fingerprints(batch_df), batch_id, "winnow")
 
     return stage
 
@@ -56,9 +52,7 @@ def winnow_stage(fp_table: ParquetTable):
 def _folded(
     spark: SparkSession, fp_table: ParquetTable, up_to_batch: int | None
 ) -> DataFrame:
-    log = fp_table.read(spark)
-    if up_to_batch is not None:
-        log = log.where(F.col("_batch_id") <= up_to_batch)
+    log = fp_table.read_log(spark, up_to_batch)
     return log.select("doc_id", "fp").dropDuplicates(["doc_id", "fp"])
 
 
@@ -126,12 +120,4 @@ def winnow_index_stage(
 ) -> None:
     """Streaming wrapper: drain available batches into the fingerprint
     log (Trigger-Once semantics, SURVEY T1)."""
-    (
-        source.writeStream.foreachBatch(winnow_stage(fp_table))
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_foreach(source, winnow_stage(fp_table), checkpoint, query_name)

@@ -21,6 +21,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..queries.text import zipf_fit_from_freq
+from .medallion import drain_foreach
 from .sinks import ParquetTable
 
 
@@ -35,9 +36,8 @@ def token_count_stage(table: ParquetTable):
             )
             .groupBy("lang", "w")
             .agg(F.count("*").alias("c"))
-            .withColumn("_batch_id", F.lit(batch_id))
         )
-        table.idempotent_append(partials, f"batchid={batch_id}/role=tokens")
+        table.append_log(partials, batch_id, "tokens")
 
     return stage
 
@@ -49,9 +49,7 @@ def zipf_from_log(
 ) -> DataFrame:
     """Batch-identical Zipf fit over the folded token-count log
     (prequential with ``up_to_batch``)."""
-    log = table.read(spark)
-    if up_to_batch is not None:
-        log = log.where(F.col("_batch_id") <= up_to_batch)
+    log = table.read_log(spark, up_to_batch)
     freq = log.groupBy("lang", "w").agg(F.sum("c").alias("f"))
     return zipf_fit_from_freq(freq)
 
@@ -64,12 +62,4 @@ def zipf_index_stage(
 ) -> None:
     """Streaming wrapper: drain available batches into the count log
     (Trigger-Once semantics, SURVEY T1)."""
-    (
-        source.writeStream.foreachBatch(token_count_stage(table))
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_foreach(source, token_count_stage(table), checkpoint, query_name)

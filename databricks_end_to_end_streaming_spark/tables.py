@@ -6,11 +6,13 @@ documents embeddings — one parquet file per table under
 
 Normalization notes (all chosen so results hash-match the DuckDB oracle):
 
-* ``events.ts`` is TIMESTAMP(NANOS) in the footer. Spark has no nanosecond
-  timestamp; with ``spark.sql.legacy.parquet.nanosAsLong=true`` it arrives
-  as a raw LongType of epoch-nanos. We truncate to microseconds and re-type
-  as TIMESTAMP_NTZ (DuckDB oracles must do the same: ``CAST(ts AS
-  TIMESTAMP)`` truncates ns → µs there).
+* ``events.ts`` is TIMESTAMP(MICROS, not UTC-adjusted) in the footers of
+  the sf0.001/0.01/0.1 files (pyarrow ``timestamp[us]``), which Spark reads
+  as TIMESTAMP_NTZ directly. A file that stores TIMESTAMP(NANOS) instead
+  has no Spark type; with ``spark.sql.legacy.parquet.nanosAsLong=true`` it
+  arrives as a raw LongType of epoch-nanos, which we truncate to
+  microseconds and re-type as TIMESTAMP_NTZ (DuckDB oracles must do the
+  same: ``CAST(ts AS TIMESTAMP)`` truncates ns → µs there).
 * ``orders.o_orderdate`` / ``lineitem.l_shipdate`` already read as
   TIMESTAMP_NTZ, matching DuckDB's naive TIMESTAMP.
 """

@@ -570,7 +570,7 @@ def test_null_value_tombstone_is_quarantined_not_lost(spark, workdir):
     assert q[0]["quarantineReason"] == "bad_framing"
 
 
-def test_write_time_file_sizing_small_batch(spark, workdir, monkeypatch):
+def test_write_time_file_sizing_small_batch(spark, workdir):
     """The stats pass's per-id counts feed the sink's write-time file
     sizing: a small micro-batch lands as ONE parquet file per schema id,
     not one per upstream partition (the streaming small-file problem)."""
@@ -592,32 +592,20 @@ def test_write_time_file_sizing_small_batch(spark, workdir, monkeypatch):
     # rows all arrived despite the repartition
     assert target.read(spark).count() == 200
 
-    # opt-out: both sizing knobs <=0 restores one-file-per-partition
-    # layout (write sizing AND the adaptive decode coalesce)
-    monkeypatch.setenv("SPARK_GRAFT_TARGET_FILE_ROWS", "0")
-    monkeypatch.setenv("SPARK_GRAFT_DECODE_ROWS_PER_TASK", "0")
-    target2 = ParquetTable(f"{workdir}/raw_unsized")
-    demux_decode_batch(
-        batch, CONFLUENT_REGISTRY, confluent_framing(), target2, batch_id=0
-    )
-    files = _glob.glob(f"{workdir}/raw_unsized/batchid=0/schemaid=1/*.parquet")
-    assert len(files) > 1
-
 
 def test_non_replay_appends_run_sequentially(spark, workdir, monkeypatch):
     """batch_id=None appends share ONE table directory, and concurrent
     Spark parquet jobs to one path share <path>/_temporary staging (the
     first commit deletes it, dropping other jobs' task output). The
     demux must therefore force the sequential path whenever batch_id is
-    None, even with parallelism configured — only the token'd
-    per-(batch, schema) dirs of the replay path are disjoint."""
+    None, even with several write jobs — only the per-(batch, schema)
+    dirs of the replay path are disjoint."""
     import threading
 
     from databricks_end_to_end_streaming_spark.streaming.ingest import (
         demux_decode_batch,
     )
 
-    monkeypatch.setenv("SPARK_GRAFT_DEMUX_PARALLELISM", "8")
     events = generate_events(30, seed=11)  # ~0.3/0.7 v1/v2 -> 2 write jobs
     batch = wire_df(spark, events)
     table = ParquetTable(f"{workdir}/raw")

@@ -238,11 +238,11 @@ def test_writer_entry_points_heal_crash_window(spark, workdir):
 
     t2 = ParquetTable(f"{workdir}/swap_then_idem")
     t2.idempotent_append(
-        spark.createDataFrame([(1, "a")], "k long, v string"), "batchid=0"
+        spark.createDataFrame([(1, "a")], "k long, v string"), 0, "role=t"
     )
     os.rename(t2.path, t2.path + "._old")
     t2.idempotent_append(
-        spark.createDataFrame([(2, "b")], "k long, v string"), "batchid=1"
+        spark.createDataFrame([(2, "b")], "k long, v string"), 1, "role=t"
     )
     assert {r["k"] for r in t2.read(spark).collect()} == {1, 2}
 
@@ -259,11 +259,13 @@ def test_mixed_int_widths_fail_fast_and_migrate(spark, workdir):
     t = ParquetTable(f"{workdir}/raw_mixed")
     t.idempotent_append(
         spark.createDataFrame([(1, "x")], "valueSchemaId int, payload string"),
-        "batchid=0",
+        0,
+        "schemaid=1",
     )
     t.idempotent_append(
         spark.createDataFrame([(2, "y")], "valueSchemaId long, payload string"),
-        "batchid=1",
+        1,
+        "schemaid=2",
     )
     with pytest.raises(RuntimeError, match="rewrite_columns"):
         t.read(spark)
