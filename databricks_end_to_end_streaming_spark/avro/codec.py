@@ -5,7 +5,7 @@ Implements the Avro binary encoding from the public spec
 zig-zag varint ints/longs, little-endian IEEE float/double,
 length-prefixed bytes/string, index-prefixed unions, block-encoded
 arrays/maps. This replaces the spark-avro jar (absent here); the hot
-path wraps it in Arrow-batched mapInPandas (see functions.py).
+path wraps it in an Arrow-batched mapInArrow kernel (see functions.py).
 
 Deliberately schema-driven and allocation-light: decoders are composed
 closures built once per schema, then applied per record.
@@ -33,17 +33,40 @@ def _write_varint(n: int, out: bytearray) -> None:
     out.append(n)
 
 
-def _read_varint(buf: bytes, pos: int) -> tuple[int, int]:
-    shift = 0
-    acc = 0
-    while True:
+def _varint_reader(max_bytes: int, bits: int) -> Callable[[bytes, int], tuple[int, int]]:
+    """zig-zag varint reader for a ``bits``-wide signed int. A varint
+    longer than ``max_bytes`` or a value outside the type's range is
+    malformed and raises ValueError: Python ints are unbounded, so
+    without the check such a value reaches the Arrow conversion, which
+    fails the whole task instead of nulling the one record."""
+    max_shift = 7 * (max_bytes - 1)
+    lo, hi = -(1 << (bits - 1)), (1 << (bits - 1)) - 1
+
+    def read(buf: bytes, pos: int) -> tuple[int, int]:
         b = buf[pos]
-        pos += 1
-        acc |= (b & 0x7F) << shift
-        if not (b & 0x80):
-            break
-        shift += 7
-    return (acc >> 1) ^ -(acc & 1), pos  # un-zig-zag
+        if b < 0x80:  # one byte: always in range
+            return (b >> 1) ^ -(b & 1), pos + 1
+        acc = b & 0x7F
+        shift = 0
+        while b & 0x80:
+            shift += 7
+            if shift > max_shift:
+                raise ValueError(f"varint longer than {max_bytes} bytes")
+            pos += 1
+            b = buf[pos]
+            acc |= (b & 0x7F) << shift
+        n = (acc >> 1) ^ -(acc & 1)  # un-zig-zag
+        if not lo <= n <= hi:
+            raise ValueError(f"varint {n} outside int{bits}")
+        return n, pos + 1
+
+    return read
+
+
+# spec: long is a zig-zag varint of at most 10 bytes, int of at most 5;
+# lengths, counts and union/enum indexes are longs
+_read_varint = _varint_reader(10, 64)
+_read_int = _varint_reader(5, 32)
 
 
 # ---------------------------------------------------------------------------
@@ -60,7 +83,9 @@ def _build_decoder(avro_type: Any) -> Decoder:
             return lambda buf, pos: (None, pos)
         if avro_type == "boolean":
             return lambda buf, pos: (buf[pos] != 0, pos + 1)
-        if avro_type in ("int", "long"):
+        if avro_type == "int":
+            return _read_int
+        if avro_type == "long":
             return _read_varint
         if avro_type == "float":
             return lambda buf, pos: (
@@ -314,46 +339,55 @@ def encode(record: dict, schema_json: str | dict) -> bytes:
 
 
 def reader_for(writer_schema: RecordSchema, reader_schema: RecordSchema):
-    """Schema-resolution reader: decode with the writer's schema, then
-    project to the reader's fields, filling absent fields from reader
-    defaults (Avro schema-resolution rules, spec §Schema Resolution).
+    """Schema-resolution reader: payload -> dict in the reader's shape
+    (see ``row_reader``)."""
+    names = reader_schema.field_names
+    read_row = row_reader(writer_schema, reader_schema)
+    return lambda payload: dict(zip(names, read_row(payload)))
 
+
+def row_reader(
+    writer_schema: RecordSchema, reader_schema: RecordSchema | None = None
+) -> Callable[[bytes], list]:
+    """Payload -> list of the record's top-level field values: the
+    column-at-a-time form of the decode, with no per-record dict.
+
+    With ``reader_schema`` this is Avro schema resolution (spec §Schema
+    Resolution): decode with the writer's schema, then project to the
+    reader's fields, absent ones taking the reader's declared default.
     This is what makes v1 payloads readable with the v2 schema: v2-only
-    fields take their declared defaults ("none" for size/color in
-    product-v2.avsc:22-33).
+    fields take their defaults ("none" for size/color in
+    product-v2.avsc:22-33). A reader field with neither a writer value
+    nor a default makes every record fail.
+
+    Raises on malformed input, like ``decoder_for``.
     """
+    decoders = [_build_decoder(f.type) for f in writer_schema.fields]
+    plan = None
+    missing = None
+    if reader_schema is not None:
+        index = {n: i for i, n in enumerate(writer_schema.field_names)}
+        plan = [(index.get(f.name), f.default) for f in reader_schema.fields]
+        missing = next(
+            (f.name for f in reader_schema.fields
+             if f.name not in index and not f.has_default),
+            None,
+        )
 
-    import json as _json
-
-    # invariant across records — serialize once, not per payload (the
-    # str key also makes decode()'s decoder-cache lookup a dict hit
-    # instead of a per-record dict stringification)
-    writer_json = _json.dumps(_schema_to_json(writer_schema))
-
-    def read(payload: bytes) -> dict:
-        raw = decode(payload, writer_json)
-        out = {}
-        for f in reader_schema.fields:
-            if f.name in raw:
-                out[f.name] = raw[f.name]
-            elif f.has_default:
-                out[f.name] = f.default
-            else:
-                raise ValueError(
-                    f"field {f.name!r} missing and has no default"
-                )
-        return out
+    def read(payload: bytes) -> list:
+        pos = 0
+        values = []
+        for dec in decoders:
+            v, pos = dec(payload, pos)
+            values.append(v)
+        if pos != len(payload):
+            raise ValueError(
+                f"trailing bytes: consumed {pos} of {len(payload)}"
+            )
+        if plan is None:
+            return values
+        if missing is not None:
+            raise ValueError(f"field {missing!r} missing and has no default")
+        return [default if i is None else values[i] for i, default in plan]
 
     return read
-
-
-def _schema_to_json(schema: RecordSchema) -> dict:
-    return {
-        "type": "record",
-        "name": schema.name,
-        "fields": [
-            {"name": f.name, "type": f.type}
-            | ({"default": f.default} if f.has_default else {})
-            for f in schema.fields
-        ],
-    }

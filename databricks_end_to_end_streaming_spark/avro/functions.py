@@ -10,23 +10,31 @@ ingest.scala:162), honoring from_avro's two corrupt-record modes:
 * FAILFAST (ingest.scala:129-131): malformed payload -> the task (and
   the streaming query) fails.
 
-Decoding runs inside mapInPandas: rows move JVM->Python once per Arrow
-batch; the per-record decode is the pure-Python codec (codec.py). If a
-spark-avro jar is on the classpath, prefer_jvm=True routes to the native
-from_avro instead.
+Without a spark-avro jar the decode is a `mapInArrow` kernel: rows
+cross JVM->Python once per Arrow batch, the pure-Python codec
+(codec.py) decodes each payload into a row of field values, the rows
+are transposed into one list per field, and the struct column is built
+with `pa.StructArray.from_arrays` at the Spark schema's Arrow types.
+Passthrough columns go back as the JVM sent them; no pandas frame, no
+per-record dict and no struct-type inference sit on the path. The same
+kernel serves writer-schema decodes and reader-schema resolution. If a
+spark-avro jar is on the classpath, prefer_jvm=True routes writer-schema
+decodes to the native from_avro instead.
 """
 
 from __future__ import annotations
 
 import json
 from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
+from .codec import row_reader
 from .schema import parse_schema, record_to_struct
 
 
@@ -108,8 +116,8 @@ def decode_avro(
     taking their declared defaults — the registry-compatibility behavior
     Glue ``FULL`` implies (producer.scala:60-61). Without it, the decoded
     struct is the writer's shape and evolution is handled downstream by
-    union-widening with NULLs (SURVEY T9). Resolution always uses the
-    Python codec — the JVM from_avro takes one schema only."""
+    union-widening with NULLs (SURVEY T9). Resolution always runs the
+    Arrow kernel — the JVM from_avro takes one schema only."""
     if mode not in ("PERMISSIVE", "FAILFAST"):
         raise ValueError(f"mode must be PERMISSIVE or FAILFAST, got {mode!r}")
     schema_str = (
@@ -128,45 +136,37 @@ def decode_avro(
             from_avro(F.col(payload_col), schema_str, {"mode": mode}),
         )
 
-    schema_dict = json.loads(schema_str)
-    if reader_schema_json is not None:
-        from .codec import reader_for
-
-        reader_str = (
-            reader_schema_json
-            if isinstance(reader_schema_json, str)
-            else json.dumps(reader_schema_json)
-        )
-        reader_parsed = parse_schema(reader_str)
-        struct_type = record_to_struct(reader_parsed)
-        read_record = reader_for(parse_schema(schema_str), reader_parsed)
-    else:
-        from .codec import decoder_for
-
-        struct_type = record_to_struct(parse_schema(schema_str))
-        # resolve the decoder ONCE: decode() re-stringifies the schema
-        # dict for its cache key on every call, which is measurable at
-        # per-record frequency
-        read_record = decoder_for(schema_dict)
-    field_names = [f.name for f in struct_type.fields]
+    writer = parse_schema(schema_str)
+    reader = None if reader_schema_json is None else parse_schema(reader_schema_json)
+    struct_type = record_to_struct(reader or writer)
     out_schema = T.StructType(
         list(df.schema.fields) + [T.StructField(output_col, struct_type, True)]
     )
+    # the Arrow types the JVM expects back; nothing casts a mismatch
+    large = spark.conf.get("spark.sql.execution.arrow.useLargeVarTypes").lower() == "true"
+    arrow_struct = to_arrow_type(struct_type, prefers_large_types=large)
+    payload_idx = df.columns.index(payload_col)
     failfast = mode == "FAILFAST"
 
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded: list[dict[str, Any] | None] = []
-            for payload in pdf[payload_col]:
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        read_row = row_reader(writer, reader)
+        null_row = [None] * arrow_struct.num_fields
+        for batch in batches:
+            rows = []
+            for payload in batch.column(payload_idx).to_pylist():
                 try:
-                    rec = read_record(bytes(payload))
-                    decoded.append({n: rec.get(n) for n in field_names})
+                    rows.append(read_row(payload))
                 except Exception:
                     if failfast:
                         raise
-                    decoded.append({n: None for n in field_names})
-            out = pdf.copy()
-            out[output_col] = decoded
-            yield out
+                    rows.append(null_row)
+            columns = list(zip(*rows)) or [()] * arrow_struct.num_fields
+            parsed = pa.StructArray.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(columns, arrow_struct)],
+                fields=list(arrow_struct),
+            )
+            yield pa.RecordBatch.from_arrays(
+                [*batch.columns, parsed], names=[*batch.schema.names, output_col]
+            )
 
-    return df.mapInPandas(mapper, out_schema)
+    return df.mapInArrow(kernel, out_schema)

@@ -16,6 +16,16 @@ cluster:
   re-types that column to TIMESTAMP_NTZ at microsecond precision. The
   sf0.001/0.01/0.1 files store TIMESTAMP(MICROS) and read as
   TIMESTAMP_NTZ without it.
+* Local masters run Python workers under ``worker_daemon`` instead of
+  ``pyspark.daemon``. Every Python task calls
+  ``importlib.invalidate_caches()``, which on CPython 3.11 re-reads the
+  ``pyspark.zip`` directory once per zipimporter — most of a small
+  task's wall. The daemon re-reads an archive only when it changed.
+  Non-local masters keep Spark's daemon: their executors may not carry
+  this package when the daemon starts. The package's parent directory
+  is prepended to ``spark.executorEnv.PYTHONPATH`` so the daemon module
+  imports from any working directory; without it a driver started
+  outside the checkout cannot launch a single Python task.
 """
 
 from __future__ import annotations
@@ -23,6 +33,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+DAEMON_MODULE = "databricks_end_to_end_streaming_spark.worker_daemon"
+# the directory that holds the package, for the daemon's PYTHONPATH
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -101,6 +115,11 @@ def get_spark(
     }
     if extra_conf:
         conf.update(extra_conf)
+    if (master or os.environ.get("SPARK_MASTER", "")).startswith("local"):
+        conf.setdefault("spark.python.daemon.module", DAEMON_MODULE)
+        conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+            p for p in (_PACKAGE_PARENT, conf.get("spark.executorEnv.PYTHONPATH")) if p
+        )
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

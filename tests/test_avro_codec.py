@@ -3,6 +3,8 @@ unit tests; wire format per the public Avro spec)."""
 
 from __future__ import annotations
 
+import json
+
 import pytest
 
 from databricks_end_to_end_streaming_spark.avro.codec import (
@@ -150,3 +152,52 @@ def test_multi_branch_union_rejected_at_encoder_build():
     }
     with pytest.raises(ValueError, match="union"):
         encode({"x": "boom"}, schema)
+
+
+INT_LONG = json.dumps(
+    {
+        "type": "record",
+        "name": "il",
+        "fields": [{"name": "i", "type": "int"}, {"name": "l", "type": "long"}],
+    }
+)
+
+
+def _varint(n: int) -> bytes:
+    out = bytearray()
+    _write_varint(n, out)
+    return bytes(out)
+
+
+@pytest.mark.parametrize(
+    "raw, why",
+    [
+        (b"\xff" * 10 + b"\x7f", "longer than 10 bytes"),
+        (b"\x80" * 10 + b"\x00", "longer than 10 bytes"),  # padded zero
+        (b"\xff" * 9 + b"\x7f", "outside int64"),  # 10 bytes, 70 bits
+    ],
+)
+def test_long_varint_out_of_range_rejected(raw, why):
+    with pytest.raises(ValueError, match=why):
+        _read_varint(raw, 0)
+    with pytest.raises(ValueError, match=why):
+        decode(_varint(0) + raw, INT_LONG)
+
+
+@pytest.mark.parametrize(
+    "raw, why",
+    [
+        (_varint(2**31), "outside int32"),
+        (_varint(-(2**31) - 1), "outside int32"),
+        (_varint(-(2**34)), "outside int32"),  # 5 bytes, -17179869184
+        (_varint(2**35), "longer than 5 bytes"),
+    ],
+)
+def test_int_varint_out_of_range_rejected(raw, why):
+    with pytest.raises(ValueError, match=why):
+        decode(raw + _varint(0), INT_LONG)
+
+
+def test_int_and_long_extremes_still_decode():
+    for i, l in [(2**31 - 1, 2**63 - 1), (-(2**31), -(2**63)), (0, 0)]:
+        assert decode(encode({"i": i, "l": l}, INT_LONG), INT_LONG) == {"i": i, "l": l}
